@@ -671,7 +671,10 @@ class LakeTable:
             g = self._read_era(paths, era_key, with_meta=with_meta)
             df = g if df is None else df.unionByName(g)
         if df is None:
-            return self.spark.createDataFrame([], self.metadata.schema_ddl)
+            ddl = self.metadata.schema_ddl
+            if with_meta:
+                ddl += ", _meta_file_path string, _meta_pos bigint"
+            return self.spark.createDataFrame([], ddl)
         return df
 
     def _read_files_with_meta(self, files: list[DataFile]) -> DataFrame:
@@ -713,6 +716,27 @@ class LakeTable:
             return False  # cannot prove over constant columns
         tpreds = [(phys.get(col, col), op, val) for col, op, val in preds]
         return _file_fully_matches(f, tpreds)
+
+    def _classify_files(self, files: list[DataFile], pred_sets: list) -> tuple:
+        """The DML file classes for deleting rows that match ANY of
+        ``pred_sets`` (one ``parse_where`` result per predicate; None
+        marks an unparseable one): ``(full, partial)``. Full: stats
+        prove every row matches one predicate (metadata-only drop).
+        Partial: stats may match, so the file is rewritten. Files in
+        neither stay untouched. An unparseable predicate makes every
+        file partial. Shared by DELETE and MoR-delete materialization
+        so their file scopes cannot drift."""
+        if any(p is None for p in pred_sets):
+            return [], list(files)
+        full, partial = [], []
+        for f in files:
+            if not any(self._file_matches(f, p) for p in pred_sets):
+                continue
+            if any(p and self._file_fully_matches(f, p) for p in pred_sets):
+                full.append(f)
+            else:
+                partial.append(f)
+        return full, partial
 
     # ------------------------------------------------------------------
     # Read path
@@ -1027,18 +1051,8 @@ class LakeTable:
         if snap is None:
             return {"deleted_rows": 0, "dropped_files": 0, "rewritten_files": 0}
         files = cat.read_snapshot_files(self.location, self.metadata, snap)
-        preds = parse_where(where)
-
-        if preds is None:
-            candidates, untouched = files, []
-        else:
-            candidates = [f for f in files if self._file_matches(f, preds)]
-            cand_paths = {f.path for f in candidates}
-            untouched = [f for f in files if f.path not in cand_paths]
-
-        full = [f for f in candidates if preds and self._file_fully_matches(f, preds)]
+        full, partial = self._classify_files(files, [parse_where(where)])
         full_paths = {f.path for f in full}
-        partial = [f for f in candidates if f.path not in full_paths]
 
         # Stats overlap is only a MAY-match: one per-file aggregation
         # over the candidates yields (rows, matched rows) per file, so
@@ -1188,7 +1202,19 @@ class LakeTable:
 
         Scoping matches the read path: each predicate rewrites only
         files that existed when it was added, so rows appended after a
-        MoR delete are never physically deleted by it.
+        MoR delete are never physically deleted by it. Within that
+        scope, files are classified like a CoW DELETE: only files whose
+        partition values or column stats may match one of the pending
+        predicates are rewritten, files stats prove all-matching are
+        dropped metadata-only, and every other file stays in the
+        manifest as it is (an unparseable predicate, e.g. one with an
+        OR, rewrites every scoped file). The predicates are marked
+        materialized in the same commit either way.
+
+        Returns (and stamps into the snapshot summary) ``deleted_rows``
+        plus ``rewritten_files``, ``dropped_files`` and
+        ``untouched_files``: the live files this pass read and
+        replaced, dropped without reading, and left in place.
         """
         snap = self.metadata.current_snapshot()
         active = self._active_delete_entries(snap)
@@ -1205,19 +1231,27 @@ class LakeTable:
             groups.setdefault((dk, self._era_key(f)), []).append(f)
         rewritten: list[DataFile] = []
         removed: set[str] = set()
-        deleted_rows = 0
+        deleted_rows = rewritten_files = dropped_files = 0
         for (dk, era_key), gfiles in groups.items():
             if not dk:
                 continue  # appended after every pending delete — untouched
+            full, partial = self._classify_files(
+                gfiles, [parse_where(active[i]["predicate"]) for i in dk]
+            )
+            deleted_rows += sum(f.row_count for f in full)
+            dropped_files += len(full)
+            removed.update(f.path for f in full)
+            if not partial:
+                continue
             combined = " OR ".join(f"({active[i]['predicate']})" for i in dk)
-            src = self._read_era([f.path for f in gfiles], era_key)
+            src = self._read_era([f.path for f in partial], era_key)
             # r16 opt: 'before' comes from the manifest's immutable
             # per-file row counts (no job — same source full-file
             # deletes already trust), and the filtered survivors
             # materialize ONCE (eager checkpoint) feeding both the
             # count and the write; previously the group was scanned
             # three times (before-count, after-count, write).
-            before = sum(f.row_count for f in gfiles)
+            before = sum(f.row_count for f in partial)
             remaining = src.filter(
                 ~F.coalesce(F.expr(combined), F.lit(False))
             ).localCheckpoint(eager=True)
@@ -1231,7 +1265,14 @@ class LakeTable:
                 for nf in self._write_data_files(remaining):
                     nf.added_snapshot_id = oldest
                     rewritten.append(nf)
-            removed.update(f.path for f in gfiles)
+            rewritten_files += len(partial)
+            removed.update(f.path for f in partial)
+        counts = {
+            "deleted_rows": deleted_rows,
+            "rewritten_files": rewritten_files,
+            "dropped_files": dropped_files,
+            "untouched_files": len(files) - len(removed),
+        }
         # Mark ONLY the entries this pass actually applied, in the SAME
         # commit as the rewrite (round-2 ADVICE: a second lock window let
         # a concurrent MoR delete land between rewrite and marking, get
@@ -1251,7 +1292,7 @@ class LakeTable:
             operation="delete",
             added=rewritten,
             removed_paths=removed,
-            summary={"deleted_rows": deleted_rows, "materialized": len(active)},
+            summary={**counts, "materialized": len(active)},
             # same read-modify-write discipline as delete/update/merge:
             # a concurrent CoW commit replacing a candidate mid-pass
             # would otherwise be silently overwritten by this rewrite
@@ -1267,7 +1308,7 @@ class LakeTable:
             )
         return {
             "materialized": len(active),
-            "deleted_rows": deleted_rows,
+            **counts,
             "snapshot_id": snap.snapshot_id,
         }
 
@@ -1433,8 +1474,8 @@ class LakeTable:
         # final write) and a non-deterministic source re-executed per
         # action would make them disagree — counts reporting rows the
         # write never saw, key-bound pruning computed from a different
-        # incarnation than the join. Same eager-checkpoint treatment the
-        # target candidates get below.
+        # incarnation than the join. (The target candidates need no such
+        # pin: they are immutable data files.)
         source = source.localCheckpoint(eager=True)
         self.materialize_deletes()  # same resurrect hazard as update()
         snap = self.metadata.current_snapshot()
@@ -1467,18 +1508,13 @@ class LakeTable:
         else:
             candidates = [f for f in files if self._file_matches(f, preds)]
         cand_paths = {f.path for f in candidates}
-        # Pin a per-row id with an eager checkpoint: survivors and
-        # matched evaluate the candidate plan independently, and a
-        # target row matched by SEVERAL source rows must still be
+        # A target row matched by SEVERAL source rows must still be
         # written exactly once (PG updates/deletes a row once; naive
-        # inner-join append would duplicate it).
-        cand_df = (
-            self._read_files(candidates)
-            .withColumn("__rid", F.monotonically_increasing_id())
-            .localCheckpoint(eager=True)
-        )
-
-        t = cand_df.alias("t")
+        # inner-join append would duplicate it). Its identity is the
+        # (file, position) pair DELETE and UPDATE use: data files are
+        # immutable, so survivors and matched, which read the candidates
+        # independently, see the same ids.
+        t = self._read_files_with_meta(candidates).alias("t")
         s = source.alias("s")
         key_cond = None
         for k in on:
@@ -1488,13 +1524,13 @@ class LakeTable:
             key_cond & F.expr(matched_condition) if matched_condition else key_cond
         )
 
-        survivors = t.join(s, full_cond, "left_anti").drop("__rid")
+        survivors = t.join(s, full_cond, "left_anti")
         # One source row per matched target row, winner chosen
         # deterministically (lowest hash of the full source row) — the
         # PG behaviour is "one arbitrary matching row"; ours is the
         # same but reproducible.
         src_cols = source.columns
-        win = Window.partitionBy("__rid").orderBy(
+        win = Window.partitionBy("t._meta_file_path", "t._meta_pos").orderBy(
             F.xxhash64(F.struct(*[F.col(f"s.{c}") for c in src_cols]))
         )
         matched = (

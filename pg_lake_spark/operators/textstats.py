@@ -420,8 +420,11 @@ def unigram_surprisal(df, id_col: str, text_col: str):
     )
     base = df.select(F.col(id_col).alias("_id"), words.alias("_w"))
     # sum() over no rows is NULL — an empty corpus should return an
-    # empty frame, not crash building the literal below
-    total = base.agg(F.sum(F.size("_w"))).collect()[0][0] or 1
+    # empty frame, not crash building the literal below. A NULL text
+    # adds 0 tokens: under the legacy sizeOfNull (non-ANSI sessions)
+    # size(NULL) is -1, which would shrink T for every document.
+    n_words = F.when(F.col("_w").isNotNull(), F.size("_w")).otherwise(0)
+    total = base.agg(F.sum(n_words)).collect()[0][0] or 1
     tok = base.select(
         "_id", F.size("_w").alias("_dl"), F.explode("_w").alias("_t")
     )

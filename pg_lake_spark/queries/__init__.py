@@ -432,6 +432,16 @@ _CODE_CHANGES: list[tuple[str, int]] = [
     # into one conditional aggregation over a single fact join (the
     # dsq74 fold). toPandas-equal; strict-checked at 3 SFs.
     ("dsq78_channel_fullouter_ratio", 17),
+    # r18: materialize_deletes rewrites only the files whose stats may
+    # match a pending predicate (shared DELETE file classification), on
+    # every DML row that materializes first; merge() keys matched rows
+    # on (file, position) instead of a checkpointed monotonic id.
+    ("dml_mor_lifecycle", 18),
+    ("dml_cow_delete", 18),
+    ("dml_update_set", 18),
+    ("dml_merge_upsert", 18),
+    # r18: a NULL text adds 0 (not size(NULL) = -1) to the token total.
+    ("txt_unigram_surprisal", 18),
 ]
 
 #: Effective manifest: explicit max-merge of the append-only pair list.

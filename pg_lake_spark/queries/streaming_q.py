@@ -304,7 +304,9 @@ def st_stream_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (signature parity) and the batch row's oracle-proven zero
     # false-drop transfers. Gated-out pairs never leave the stateful
     # operator — the verify stage's doc set, shingling and per-pair
-    # intersects all shrink by the gate's ~68% candidate cut.
+    # intersects all shrink by the gate's ~68% candidate cut. Gated
+    # state carries the signatures (a different state schema), so a
+    # gated run needs a fresh checkpointLocation, not an ungated one's.
     pairs_stream = stream_lsh_candidates(
         stream, "doc_id", "text", shingle_n=2, num_hashes=12, bands=4,
         state_groups=max(32, (4 * n_docs) // 2048),

@@ -1404,7 +1404,9 @@ def dsq78_channel_fullouter_ratio(spark: SparkSession, sf_dir: str) -> DataFrame
     # untouched. Output toPandas-equal (25,188 rows, dtypes included).
     # Local A/B is modest (dims broadcast at sf0.1: 1.46 → 1.33s) but
     # the plan drops one full fact join + the SMJ FullOuter — the terms
-    # that dominate at scale.
+    # that dominate at scale. The fold assumes non-NULL group keys
+    # (o_custkey, l_shipdate): groupBy merges NULL keys that the outer
+    # join kept apart.
     agg = base.groupBy(
         F.col("o_custkey").alias("custkey"),
         F.year("l_shipdate").cast("int").alias("yr"),

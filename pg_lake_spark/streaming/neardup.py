@@ -320,6 +320,10 @@ def stream_lsh_candidates(
         # which holds for every sensible banding (a threshold above the
         # midpoint means the banding is too loose for the query).
         est_gate = _auto_est_gate(0.0, num_hashes, bands)
+    if est_gate is not None and est_gate <= 0:
+        # a gate nothing can fail is no gate (the batch contract):
+        # keep the ungated state schema and skip the per-batch gate
+        est_gate = None
     banded = streaming_band_keys(
         stream_df, id_col, text_col,
         shingle_n=shingle_n, num_hashes=num_hashes, bands=bands,

@@ -259,6 +259,28 @@ def test_unigram_surprisal_orders_rarity(spark):
     assert out[2] > out[1]
 
 
+def test_unigram_surprisal_null_text_adds_no_tokens(spark):
+    """A NULL-text document contributes 0 tokens to the corpus total T,
+    also under the legacy sizeOfNull (non-ANSI sessions, where
+    size(NULL) is -1): the other documents score exactly as without it."""
+    from pg_lake_spark.operators.textstats import unigram_surprisal
+
+    rows = [(1, "a b c"), (2, "a a d"), (3, "b e")]
+    schema = "doc_id bigint, text string"
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        def scores(data):
+            df = spark.createDataFrame(data, schema)
+            return {r.doc_id: r.surprisal
+                    for r in unigram_surprisal(df, "doc_id", "text").collect()}
+
+        with_null = scores(rows + [(4, None)])
+        assert with_null == scores(rows)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+
 def test_connected_components_long_chain_converges(spark):
     """A 60-node chain needs ~59 rounds under plain min-propagation —
     the r14 short-cutting (pointer doubling) closes it within the

@@ -388,6 +388,40 @@ def test_merge_prunes_untouched_files(spark, tmp_path):
     assert len(rows) == 30
 
 
+def test_merge_insert_only_when_no_file_can_match(spark, tmp_path):
+    """Source keys outside every file's stats: no candidate file, so the
+    target side is an empty frame (still carrying the row-id columns);
+    all source rows insert and none of the id columns leak out."""
+    t = _mk_kv_table(spark, tmp_path, "merge_nocand")
+    before = _live_paths(t)
+    src = spark.createDataFrame([(50, "x", 5.0), (51, "y", 6.0)], "id bigint, name string, val double")
+    res = t.merge(src, on=["id"], when_matched_update={"val": "s.val"})
+    assert (res["updated_rows"], res["inserted_rows"], res["rewritten_files"]) == (0, 2, 0)
+    assert before <= _live_paths(t)
+    assert t.to_df().columns == ["id", "name", "val"]
+    assert t.to_df().count() == 12
+
+
+def test_merge_row_identity_spans_files(spark, tmp_path):
+    """The matched-row identity is (file, position): rows at the same
+    position in different candidate files are distinct rows, each
+    updated once."""
+    loc = str(tmp_path / "merge_rid")
+    t = LakeTable.create(spark, loc, "id bigint, val double")
+    for lo in (0, 10):
+        t.append(
+            spark.createDataFrame(
+                [(lo + i, float(i)) for i in range(3)], "id bigint, val double"
+            ).coalesce(1)
+        )
+    # ids 0 and 10 both sit at position 0 of their file
+    src = spark.createDataFrame([(0, 100.0), (10, 110.0)], "id bigint, val double")
+    res = t.merge(src, on=["id"], when_matched_update={"val": "s.val"})
+    assert (res["updated_rows"], res["inserted_rows"]) == (2, 0)
+    rows = sorted((r.id, r.val) for r in t.to_df().collect())
+    assert rows == [(0, 100.0), (1, 1.0), (2, 2.0), (10, 110.0), (11, 1.0), (12, 2.0)]
+
+
 def test_merge_snapshot_isolation(spark, tmp_path):
     """Old snapshot still reads pre-merge data (time travel)."""
     t = _mk_kv_table(spark, tmp_path)
@@ -432,6 +466,126 @@ def test_mor_materialize_preserves_history(spark, tmp_path):
     assert t.to_df().count() == 8                       # physical now
     assert t.active_delete_predicates() == []           # predicate retired
     assert t.to_df(snapshot_id=mor_snap).count() == 8   # MoR-era read still filtered
+
+
+def _mk_parted(spark, tmp_path, name):
+    """Four partitions of 100 keys (``truncate(100, k)``), one data file
+    each; ``v`` is NULL on every 10th row."""
+    df = spark.createDataFrame(
+        [(k, None if k % 10 == 0 else k % 50) for k in range(400)], "k bigint, v int"
+    )
+    return LakeTable.create_from_dataframe(
+        spark, str(tmp_path / name), df, partition_by=["truncate(100, k)"]
+    )
+
+
+def _files_by_part(t):
+    from pg_lake_spark.lakehouse import catalog as _cat
+
+    files = _cat.read_snapshot_files(t.location, t.metadata, t.metadata.current_snapshot())
+    out: dict = {}
+    for f in files:
+        out.setdefault(next(iter(f.partition.values())), set()).add(f.path)
+    return out
+
+
+@pytest.mark.parametrize("via_vacuum", [False, True])
+def test_materialize_rewrites_only_matching_partition(spark, tmp_path, via_vacuum):
+    """A MoR delete confined to one partition is made physical by
+    rewriting only that partition's file: every other data file stays
+    in the new manifest under the same path."""
+    t = _mk_parted(spark, tmp_path, f"mat_prune_{via_vacuum}")
+    before = _files_by_part(t)
+    assert len(before) == 4 and all(len(p) == 1 for p in before.values())
+    t.delete("k >= 110 AND k < 130", mode="mor")
+    if via_vacuum:
+        out = maintenance.vacuum(t, max_snapshot_age_s=0, deletion_retention_s=0)
+        out = out["materialize_deletes"]
+    else:
+        out = t.materialize_deletes()
+    assert (out["rewritten_files"], out["dropped_files"], out["untouched_files"]) == (1, 0, 3)
+    assert out["deleted_rows"] == 20
+    after = _files_by_part(t)
+    assert set(after) == set(before)
+    for part in (0, 200, 300):
+        assert after[part] == before[part]
+    assert after[100].isdisjoint(before[100])
+    assert t.active_delete_predicates() == []
+    ks = {r.k for r in t.scan().collect()}
+    assert ks == set(range(400)) - set(range(110, 130))
+
+
+def test_materialize_counts_pinned_in_snapshot_summary(spark, tmp_path):
+    """materialize_deletes() reports the file classes delete()/merge()
+    report, and stamps the same numbers into its snapshot summary: a
+    stats-proven full match is dropped without a rewrite."""
+    t = _mk_parted(spark, tmp_path, "mat_counts")
+    t.delete("k >= 300", mode="mor")  # partition 300: every row matches
+    t.delete("k >= 5 AND k < 8", mode="mor")  # partition 0: some rows
+    out = t.materialize_deletes()
+    want = {"rewritten_files": 1, "dropped_files": 1, "untouched_files": 2, "deleted_rows": 103}
+    assert {k: out[k] for k in want} == want
+    summary = t.metadata.current_snapshot().summary
+    assert {k: summary[k] for k in want} == want
+    assert summary["materialized"] == out["materialized"] == 2
+    assert t.scan().count() == 400 - 103
+
+
+def test_materialize_keeps_rows_where_predicate_is_null(spark, tmp_path):
+    """Pruned materialization stays NULL-safe: rows whose predicate
+    evaluates to NULL (v IS NULL) survive, as they did under MoR."""
+    t = _mk_parted(spark, tmp_path, "mat_null")
+    t.delete("k >= 200 AND k < 300 AND v < 100", mode="mor")
+    mor_rows = sorted((r.k, r.v) for r in t.scan().collect())
+    out = t.materialize_deletes()
+    assert (out["rewritten_files"], out["untouched_files"]) == (1, 3)
+    rows = sorted((r.k, r.v) for r in t.scan().collect())
+    assert rows == mor_rows
+    assert [k for k, _ in rows if 200 <= k < 300] == list(range(200, 300, 10))
+
+
+def test_materialize_or_predicate_rewrites_every_scoped_file(spark, tmp_path):
+    """An OR predicate cannot be checked against stats file by file, so
+    every scoped file is rewritten — and the result is still right."""
+    t = _mk_parted(spark, tmp_path, "mat_or")
+    t.delete("k = 5 OR k = 305", mode="mor")
+    out = t.materialize_deletes()
+    assert (out["rewritten_files"], out["untouched_files"]) == (4, 0)
+    assert out["deleted_rows"] == 2
+    assert {r.k for r in t.scan().collect()} == set(range(400)) - {5, 305}
+
+
+def test_materialize_leaves_later_appends_alone(spark, tmp_path):
+    """Files appended after the MoR delete are out of its scope: neither
+    rewritten nor filtered, even when their rows match the predicate
+    and sit in the partition the delete rewrites."""
+    t = _mk_parted(spark, tmp_path, "mat_append")
+    t.delete("k >= 110 AND k < 130", mode="mor")
+    before = _live_paths(t)
+    t.append(spark.createDataFrame([(115, 1), (450, 2)], "k bigint, v int"))
+    appended = _live_paths(t) - before
+    assert len(appended) == 2
+    out = t.materialize_deletes()
+    # the pre-delete partition-100 file is the only rewrite; both
+    # appended files (partitions 100 and 400) keep their paths
+    assert (out["rewritten_files"], out["untouched_files"]) == (1, 5)
+    assert out["deleted_rows"] == 20
+    assert appended <= _live_paths(t)
+    ks = sorted(r.k for r in t.scan().collect())
+    assert ks.count(115) == 1 and 450 in ks and len(ks) == 400 - 20 + 2
+
+
+def test_materialize_time_travel_to_mor_snapshot(spark, tmp_path):
+    """After a pruned materialization, a read at the MoR-delete snapshot
+    still applies the predicate to that snapshot's files."""
+    t = _mk_parted(spark, tmp_path, "mat_tt")
+    t.delete("k >= 110 AND k < 130", mode="mor")
+    mor_snap = t.metadata.current_snapshot().snapshot_id
+    t.materialize_deletes()
+    maintenance.vacuum(t, max_snapshot_age_s=3600, deletion_retention_s=3600)
+    want = set(range(400)) - set(range(110, 130))
+    assert {r.k for r in t.scan(snapshot_id=mor_snap).collect()} == want
+    assert {r.k for r in t.scan().collect()} == want
 
 
 def test_auto_mode_picks_mor_for_selective_delete(spark, tmp_path):

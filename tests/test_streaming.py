@@ -414,6 +414,27 @@ def test_stream_lsh_gated_candidates_equal_batch_gate(spark, tmp_path):
     assert len(want) < n_ungated  # the gate actually gates here
 
 
+def test_stream_lsh_nonpositive_gate_is_ungated(spark):
+    """est_gate <= 0 means no gate, as in the batch lsh_candidate_pairs:
+    the state keeps the ungated schema (no signatures carried, no
+    ``_sig`` column), so est_gate=0.0 plans exactly like est_gate=None."""
+    from pg_lake_spark.streaming.neardup import stream_lsh_candidates
+
+    stream = spark.readStream.schema("doc_id bigint, text string").parquet(
+        os.path.join(SF_DIR, "documents.[p]arquet")
+    )
+
+    def state_input(gate):
+        """Columns fed to the stateful operator (the plan's root)."""
+        pairs = stream_lsh_candidates(stream, "doc_id", "text", est_gate=gate)
+        plan = pairs._jdf.queryExecution().analyzed()
+        return list(plan.children().head().schema().fieldNames())
+
+    assert "_sig" in state_input(0.5)  # the probe sees a real gate
+    for gate in (0.0, -1.0):
+        assert state_input(gate) == state_input(None)
+
+
 def test_stream_lsh_gated_state_restore_across_microbatches(spark, tmp_path):
     """The gated emitter's state-RESTORE path (signatures round-tripped
     through the state store) — never exercised by single-micro-batch
