@@ -18,6 +18,25 @@ Scale notes (100 TB design intent):
 - Broadcast threshold left at default (10 MB); dimension tables in the
   star schema broadcast automatically, and `queries/` adds explicit
   ``broadcast()`` hints where the optimizer cannot know sizes.
+- Generated-code cache sized to the working set
+  (``CODEGEN_CACHE_ENTRIES``). Spark keeps Janino-compiled classes in
+  one JVM-wide LRU cache of ``spark.sql.codegen.cache.maxEntries``
+  (default 100). Distinct classes per pass, measured on local[4]: the
+  ``bench.py`` headline suite 228 (warm-up at sf0.001 plus sf0.1), the
+  lakebench ``dataprep`` rows 185, ``lake_rw`` 109 plus 22 per pass whose
+  where-clause literals are compiled into the code. At 100 entries no
+  pass ever hit: each headline pass recompiled 278 classes and each
+  ``dataprep`` pass ~180, JIT-compiled them again, and loaded ~370 new
+  classes (~3.8 MB of metaspace) until a collection unloaded the
+  evicted ones. At 2000 a repeated pass compiles nothing; a full cache
+  would hold ~40 MB of metaspace (~20 KB per compiled entry).
+  Whole-stage class names also drop their codegen stage id
+  (``spark.sql.codegen.useIdInClassName``): AQE numbers stages in the
+  order their inputs finish, so with the id in the source the same
+  stage missed the cache on a later run (``dd_bloom_semi_join``, 4
+  classes). The cache is built once per JVM, at its first code
+  generation, so the size applies only when :func:`get_spark` creates
+  the JVM's first session; a caller's own session keeps 100.
 """
 
 from __future__ import annotations
@@ -42,6 +61,13 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
+
+#: Entries in Spark's JVM-wide generated-code cache
+#: (``spark.sql.codegen.cache.maxEntries``, default 100): well above the
+#: engine's largest measured working set of generated classes (228),
+#: because an LRU cache smaller than a cyclic working set never hits
+#: (see Scale notes).
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 def _default_parallelism() -> str:
@@ -77,6 +103,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", os.environ.get("PG_LAKE_SPARK_UI", "false"))
         .config("spark.driver.memory", os.environ.get("PG_LAKE_DRIVER_MEM", "8g"))
+        # Static conf: read once, when the JVM first generates code, so
+        # it is not in _RUNTIME_CONFS (setting it at runtime raises).
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # The cache is keyed by the generated source; keep AQE's run-to-run
+        # stage numbering out of it (see Scale notes).
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -309,7 +309,11 @@ def stream_lsh_candidates(
     emit every candidate, the prior behavior); when set, each banded
     row carries the full signature into state (+num_hashes bigints
     per member) and the gate runs vectorized inside the operator —
-    see _make_emit_pairs_gated."""
+    see _make_emit_pairs_gated. That extra signature column makes the
+    gated and ungated state schemas differ: restarting on the other
+    mode's checkpoint raises Spark's
+    STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE on the first new
+    micro-batch, so each mode needs its own checkpointLocation."""
     if est_gate == "auto":
         from pg_lake_spark.operators.dedup import _auto_est_gate
 

@@ -489,6 +489,52 @@ def test_stream_lsh_gated_state_restore_across_microbatches(spark, tmp_path):
     assert multi == single and multi
 
 
+def test_stream_lsh_gated_restart_on_ungated_checkpoint_fails_loudly(spark, tmp_path):
+    """Gated state carries each member's signature, so its state schema
+    differs from the ungated one. Restarting a drained ungated stream
+    gated on the same checkpoint must raise on the first new
+    micro-batch instead of resuming from state it cannot read, and must
+    emit nothing."""
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    from pg_lake_spark.streaming.neardup import stream_lsh_candidates
+    from tests.conftest import SF_DIR
+
+    docs = (
+        spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
+        .select("doc_id", "text")
+        .toPandas()
+    )
+    src = tmp_path / "in"
+    src.mkdir()
+    half = len(docs) // 2
+    docs.iloc[:half].to_parquet(src / "part0.parquet")
+    out, chk = tmp_path / "out", tmp_path / "chk"
+
+    def drain(est_gate):
+        stream = spark.readStream.schema("doc_id bigint, text string").parquet(str(src))
+        q = (
+            stream_lsh_candidates(stream, "doc_id", "text", shingle_n=2, est_gate=est_gate)
+            .writeStream.format("parquet")
+            .option("path", str(out))
+            .option("checkpointLocation", str(chk))
+            .trigger(availableNow=True)
+            .outputMode("append")
+            .start()
+        )
+        q.awaitTermination(180)
+
+    drain(None)
+    emitted = spark.read.parquet(str(out)).count()
+    assert emitted > 0
+    docs.iloc[half:].to_parquet(src / "part1.parquet")
+    with pytest.raises(StreamingQueryException, match="STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"):
+        drain("auto")
+    assert spark.read.parquet(str(out)).count() == emitted
+
+
 def test_streaming_band_keys_fold_equals_per_hash_spelling(spark):
     """r16 differential pin: the single-fold signature (one xxhash64
     pass + aggregate/zip_with running minimum) computes exactly the

@@ -1,19 +1,21 @@
-"""Dump .explain("formatted") for bench-suite queries into plans/r16/.
+"""Dump .explain("formatted") for bench-suite queries into plans/r{N}/.
 
-Usage: python tools/dump_plans_r16.py before|after [query ...]
+Usage: python tools/dump_plans.py --round N before|after [query ...]
 
-Writes plans/r16/<query>_<tag>.txt — the optimization round's
-before/after plan evidence (the judge reads these instead of running
-Spark). Default query set = every query named in bench.py's five
-suites; pass names to restrict.
+Writes plans/r{N}/<query>_<tag>.txt — an optimization round's
+before/after plan evidence, readable without running Spark. Default
+query set = every query named in bench.py's five suites; pass names to
+restrict.
 """
 
+import argparse
 import io
 import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 BENCH_SUITE = [
     # headline
@@ -39,17 +41,22 @@ BENCH_SUITE = [
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or BENCH_SUITE
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--round", type=int, required=True, help="writes plans/r{N}/")
+    ap.add_argument("tag", choices=["before", "after"])
+    ap.add_argument("queries", nargs="*", help="default: every bench-suite query")
+    args = ap.parse_args()
+    tag = args.tag
+    names = args.queries or BENCH_SUITE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from pg_lake_spark.queries import QUERIES
     from pg_lake_spark.session import get_spark
 
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r16")
+    out_dir = os.path.join(ROOT, "plans", f"r{args.round}")
     os.makedirs(out_dir, exist_ok=True)
 
-    spark = get_spark(app_name=f"plans-r16-{tag}", master="local[8]")
+    spark = get_spark(app_name=f"plans-r{args.round}-{tag}", master="local[8]")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         if name not in QUERIES:

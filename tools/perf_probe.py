@@ -5,7 +5,10 @@ Usage: python tools/perf_probe.py [-n REPEATS] [query ...]
 Unlike bench.py (driver contract, .count() action), this probe times
 df.write.format("noop") — every column of every row computed, nothing
 collected (optimization guide §1.4) — and reports median/min over N
-repeats plus the job count. Pure diagnostic; never feeds artifacts.
+repeats plus the job count and the Janino compilations per run
+(compiles/run: near 0 once the generated-code cache holds the query's
+classes; a cache that thrashes recompiles them on every run).
+Pure diagnostic; never feeds artifacts.
 """
 
 import argparse
@@ -36,6 +39,7 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
+    compilations = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     try:
         warm_python_workers(spark)
     except Exception:
@@ -60,16 +64,19 @@ def main() -> None:
             print(f"{name}: warm failed {e}")
         samples = []
         jobs0 = sc._jsc.sc().dagScheduler().nextJobId()
+        compiles0 = compilations.getCount()
         for i in range(args.n):
             sc.setJobDescription(f"{name} [{i}]")
             t0 = time.perf_counter()
             run(fn(spark, args.sf))
             samples.append(time.perf_counter() - t0)
         jobs1 = sc._jsc.sc().dagScheduler().nextJobId()
+        compiles1 = compilations.getCount()
         sc.setJobDescription(None)
         print(
             f"{name}: median {statistics.median(samples):.3f}s min {min(samples):.3f}s "
             f"max {max(samples):.3f}s jobs/run {(jobs1 - jobs0) / args.n:.1f} "
+            f"compiles/run {(compiles1 - compiles0) / args.n:.1f} "
             f"samples {[round(s, 3) for s in samples]}"
         )
     spark.stop()
